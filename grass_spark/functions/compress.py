@@ -25,6 +25,19 @@ Timestamps are int64 microseconds; dods are zigzag-encoded before
 classification.  Floats are bit-cast to uint64 and XORed with the
 previous value (prefix-xor <=> cumulative-xor on decode).  NULLs are
 carried in a separate validity bitmap (GRASS NULL-cell analog).
+
+Two entry points per stream.  ``encode_*`` encodes ONE block and is the
+reference.  The segmented kernels ``encode_timestamps_many``,
+``encode_ints_many``, ``encode_floats_many`` and
+``encode_validity_many`` take ``(values, block_starts, block_lens)``
+and encode every block of a batch in one pass: delta / delta-of-delta /
+XOR over the whole batch with a reset at each block start, one
+``_classify``, one ``packbits`` of the class bits (padded to whole bytes
+per block) and one payload pack.  They return the blocks in Arrow
+binary layout — one ``uint8`` buffer plus ``n_blocks + 1`` offsets —
+and block ``i``'s bytes ``buf[offsets[i]:offsets[i + 1]]`` are
+byte-identical to ``encode_*`` of that block alone (pinned by
+``tests/test_compress.py``).
 """
 
 from __future__ import annotations
@@ -183,3 +196,106 @@ def encode_validity(mask: np.ndarray) -> bytes:
 
 def decode_validity(buf: bytes, n: int) -> np.ndarray:
     return np.unpackbits(np.frombuffer(buf, dtype=np.uint8))[:n].astype(bool)
+
+
+# ---------------------------------------------------------------------------
+# segmented kernels: every block of a batch in one pass
+# ---------------------------------------------------------------------------
+
+
+def _excl_cumsum(x: np.ndarray) -> np.ndarray:
+    """Exclusive prefix sum: where each block's run begins."""
+    out = np.zeros(len(x), dtype=np.int64)
+    np.cumsum(x[:-1], out=out[1:])
+    return out
+
+
+def _segments(
+    values: np.ndarray, block_starts, block_lens
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The blocks' values laid out back to back, the block lengths and
+    the position of each non-empty block's first value in that layout."""
+    starts = np.asarray(block_starts, dtype=np.int64)
+    lens = np.asarray(block_lens, dtype=np.int64)
+    offs = _excl_cumsum(lens)
+    total = int(lens.sum())
+    if total != len(values) or not np.array_equal(starts, offs):
+        values = values[np.arange(total) + np.repeat(starts - offs, lens)]
+    return values, lens, offs[lens > 0]
+
+
+def _packbits_many(bits: np.ndarray, nbits: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``np.packbits`` of each block's run of ``nbits`` bits, every run
+    padded to whole bytes; returns the bytes and each block's byte count."""
+    nbytes = (nbits + 7) // 8
+    shift = np.repeat(8 * _excl_cumsum(nbytes) - _excl_cumsum(nbits), nbits)
+    padded = np.zeros(8 * int(nbytes.sum()), dtype=np.uint8)
+    padded[np.arange(len(bits)) + shift] = bits
+    return np.packbits(padded), nbytes
+
+
+def _join_many(parts: list[tuple[np.ndarray, np.ndarray]]) -> tuple[np.ndarray, np.ndarray]:
+    """Block ``i`` of the result is the concatenation of block ``i`` of
+    every part; a part is (bytes, per-block byte counts)."""
+    lens = np.sum([n for _, n in parts], axis=0, dtype=np.int64)
+    offsets = np.concatenate(([0], np.cumsum(lens)))
+    out = np.empty(int(offsets[-1]), dtype=np.uint8)
+    at = offsets[:-1].copy()
+    for data, n in parts:
+        out[np.arange(len(data)) + np.repeat(at - _excl_cumsum(n), n)] = data
+        at += n
+    return out, offsets
+
+
+def _encode_u64_many(u: np.ndarray, lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Segmented :func:`_encode_u64_stream`: header, class bits and
+    payload of every block, cut apart by offset."""
+    cls = _classify(u)
+    head = np.empty((len(lens), 10), dtype=np.uint8)
+    head[:, 0] = _MAGIC
+    head[:, 1] = 1
+    head[:, 2:] = lens.astype("<i8").view(np.uint8).reshape(-1, 8)
+    cls_bits = ((cls[:, None] >> np.array([1, 0], dtype=np.uint8)) & 1).astype(np.uint8).ravel()
+    cls_bytes, cls_lens = _packbits_many(cls_bits, 2 * lens)
+    payload = np.frombuffer(_pack_payload(u, cls), dtype=np.uint8)
+    ends = np.concatenate(([0], np.cumsum(_CLASS_BITS[cls] // 8)))
+    pay_lens = ends[np.cumsum(lens)] - ends[_excl_cumsum(lens)]
+    return _join_many([
+        (head.ravel(), np.full(len(lens), 10, dtype=np.int64)),
+        (cls_bytes, cls_lens),
+        (payload, pay_lens),
+    ])
+
+
+def encode_timestamps_many(ts_us, block_starts, block_lens) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`encode_timestamps` of every block ``ts_us[s:s + n]``."""
+    ts, lens, firsts = _segments(np.asarray(ts_us, dtype=np.int64), block_starts, block_lens)
+    deltas = np.diff(ts, prepend=ts[:1])
+    deltas[firsts] = 0
+    dod = np.diff(deltas, prepend=deltas[:1])
+    dod[firsts] = ts[firsts]
+    return _encode_u64_many(_zigzag(dod), lens)
+
+
+def encode_floats_many(vals, block_starts, block_lens) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`encode_floats` of every block ``vals[s:s + n]``."""
+    bits = np.ascontiguousarray(np.asarray(vals, dtype=np.float64)).view(np.uint64)
+    v, lens, firsts = _segments(bits, block_starts, block_lens)
+    x = v ^ np.concatenate(([np.uint64(0)], v[:-1]))
+    x[firsts] = v[firsts]
+    return _encode_u64_many(x, lens)
+
+
+def encode_ints_many(vals, block_starts, block_lens) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`encode_ints` of every block ``vals[s:s + n]``."""
+    v, lens, firsts = _segments(np.asarray(vals, dtype=np.int64), block_starts, block_lens)
+    d = np.diff(v, prepend=v[:1])
+    d[firsts] = v[firsts]
+    return _encode_u64_many(_zigzag(d), lens)
+
+
+def encode_validity_many(mask, block_starts, block_lens) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`encode_validity` of every block ``mask[s:s + n]``."""
+    m, lens, _ = _segments(np.asarray(mask, dtype=bool), block_starts, block_lens)
+    data, nbytes = _packbits_many(m.view(np.uint8), lens)
+    return data, np.concatenate(([0], np.cumsum(nbytes)))

@@ -433,18 +433,29 @@ class RollupPipeline:
 
     def _write_blocks(self, spark: SparkSession, name: str) -> dict:
         """Materialize the tier's Gorilla block store (delta-of-delta
-        timestamps + delta ints inside Arrow pandas UDFs) and return the
-        codec metrics (ratio recorded per tier in the manifest)."""
-        from grass_spark.operators.blocks import compress_blocks, compression_report
+        timestamps + delta ints, segmented numpy kernels over Arrow
+        batches) and return the codec metrics (ratio recorded per tier in
+        the manifest), observed during the write rather than by a second
+        job over the written store."""
+        from pyspark.sql import Observation
+
+        from grass_spark.operators.blocks import compress_blocks, report_columns
 
         tier = spark.read.parquet(self.tier_path(name))
         blocks = compress_blocks(
             tier, keys=self.keys, ts_col="bucket_start",
             int_cols=list(self.INT_METRICS), block="month",
         )
+        # the encode runs on defaultParallelism partitions; one more
+        # (tiny) shuffle lets AQE size the files by bytes again, and the
+        # sort clusters each key's blocks in its file
+        blocks = blocks.repartition(*self.keys, "block_start").sortWithinPartitions(
+            *self.keys, "block_start"
+        )
+        obs = Observation(f"blocks_{name}")
         bpath = self.tier_path(name) + "_blocks"
-        blocks.write.mode("overwrite").parquet(bpath)
-        rep = compression_report(spark.read.parquet(bpath)).collect()[0]
+        blocks.observe(obs, *report_columns()).write.mode("overwrite").parquet(bpath)
+        rep = obs.get
         return {
             "n_blocks": int(rep["n_blocks"]), "n_points": int(rep["n_points"]),
             "raw_bytes": int(rep["raw_bytes"]), "comp_bytes": int(rep["comp_bytes"]),
